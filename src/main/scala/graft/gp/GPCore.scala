@@ -28,9 +28,9 @@ import graft.gp.kernel.{ExpertData, Kernel}
  */
 object GPCore {
 
-  class NotPositiveDefiniteException extends Exception(
+  class NotPositiveDefiniteException(cause: Throwable = null) extends Exception(
     "A matrix that must be positive definite is not; the `noise` " +
-      "parameter is probably too small — increase it gradually.")
+      "parameter is probably too small — increase it gradually.", cause)
 
   // ---------------------------------------------------------------- experts
 
@@ -454,7 +454,7 @@ object GPCore {
 
   private[gp] def cholOrThrow(mat: BDM[Double]): BDM[Double] =
     try cholesky(mat)
-    catch { case _: Exception => throw new NotPositiveDefiniteException }
+    catch { case e: Exception => throw new NotPositiveDefiniteException(e) }
 }
 
 /**

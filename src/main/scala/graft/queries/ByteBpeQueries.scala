@@ -82,20 +82,16 @@ object ByteBpeQueries {
           .collect().map(r => (r.getLong(0), r.getString(1)))
         val stream = org.apache.spark.sql.execution.streaming.runtime
           .MemoryStream[(Long, String)]
-        val q = graft.ops.ByteBpe.tokenCounts(
-            stream.toDS().toDF("c_custkey", "c_name"),
-            "c_custkey", "c_name", ByteBpeMerges1k)
-          .filter(col("n_words") > 0)
-          .writeStream.format("memory").queryName("st38_tokens")
-          .outputMode("append").start()
-        try {
-          val chunk = math.max(1, (rows.length + 1) / 2)
-          rows.grouped(chunk).foreach { batch =>
-            stream.addData(batch.toIndexedSeq)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
-        s.table("st38_tokens").orderBy("c_custkey")
+        val chunk = math.max(1, (rows.length + 1) / 2)
+        StreamReplay(s,
+            graft.ops.ByteBpe.tokenCounts(
+                stream.toDS().toDF("c_custkey", "c_name"),
+                "c_custkey", "c_name", ByteBpeMerges1k)
+              .filter(col("n_words") > 0),
+            "st38_tokens")(
+          rows.grouped(chunk).map(batch => () =>
+            stream.addData(batch.toIndexedSeq)))
+          .orderBy("c_custkey")
       },
       Some(st38OracleSql)))
 

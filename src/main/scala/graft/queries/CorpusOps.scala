@@ -369,18 +369,14 @@ object CorpusOps {
           .collect().map(r => (r.getLong(0), r.getString(1)))
         val stream = org.apache.spark.sql.execution.streaming.runtime
           .MemoryStream[(Long, String)]
-        val q = graft.streaming.CorpusStream.kn3ScoringStream(
-            stream.toDS().toDF("doc_id", "text"), "doc_id", "text", lm)
-          .writeStream.format("memory").queryName("st30_scores")
-          .outputMode("append").start()
-        try {
-          val chunk = math.max(1, (rows.length + 1) / 2)
-          rows.grouped(chunk).foreach { batch =>
-            stream.addData(batch.toIndexedSeq)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
-        s.table("st30_scores").orderBy("doc_id")
+        val chunk = math.max(1, (rows.length + 1) / 2)
+        StreamReplay(s,
+            graft.streaming.CorpusStream.kn3ScoringStream(
+                stream.toDS().toDF("doc_id", "text"), "doc_id", "text", lm),
+            "st30_scores")(
+          rows.grouped(chunk).map(batch => () =>
+            stream.addData(batch.toIndexedSeq)))
+          .orderBy("doc_id")
       },
       Some(kn3PerplexityOracleSql("doc_id < 2000"))),
 
@@ -414,18 +410,14 @@ object CorpusOps {
           .collect().map(r => (r.getLong(0), r.getString(1)))
         val stream = org.apache.spark.sql.execution.streaming.runtime
           .MemoryStream[(Long, String)]
-        val q = graft.streaming.CorpusStream.knScoringStream(
-            stream.toDS().toDF("doc_id", "text"), "doc_id", "text", lm)
-          .writeStream.format("memory").queryName("st29_scores")
-          .outputMode("append").start()
-        try {
-          val chunk = math.max(1, (rows.length + 1) / 2)
-          rows.grouped(chunk).foreach { batch =>
-            stream.addData(batch.toIndexedSeq)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
-        s.table("st29_scores").orderBy("doc_id")
+        val chunk = math.max(1, (rows.length + 1) / 2)
+        StreamReplay(s,
+            graft.streaming.CorpusStream.knScoringStream(
+                stream.toDS().toDF("doc_id", "text"), "doc_id", "text", lm),
+            "st29_scores")(
+          rows.grouped(chunk).map(batch => () =>
+            stream.addData(batch.toIndexedSeq)))
+          .orderBy("doc_id")
       },
       Some(knPerplexityOracleSql("doc_id < 2000"))),
 

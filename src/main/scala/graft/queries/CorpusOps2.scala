@@ -111,28 +111,18 @@ object CorpusOps2 {
           .collect().map(r => (r.getLong(0), r.getString(1)))
         val stream = org.apache.spark.sql.execution.streaming.runtime
           .MemoryStream[SpanStream.Doc]
-        val ckpt = java.nio.file.Files.createTempDirectory("st05_ckpt").toString
-        val q = Q.withHarnessPartitions(s) {
-          SpanStream.sharedSpans(stream.toDS(), watermark = "10 minutes")
-            .writeStream.format("memory").queryName("st05_spans")
-            .option("checkpointLocation", ckpt)
-            .outputMode("append").start()
-        }
-        try {
-          val chunk = math.max(1, (rows.length + 1) / 2)
-          rows.grouped(chunk).zipWithIndex.foreach { case (batch, i) =>
+        val chunk = math.max(1, (rows.length + 1) / 2)
+        val spans = StreamReplay(s,
+            SpanStream.sharedSpans(stream.toDS(), watermark = "10 minutes"),
+            "st05_spans")(
+          rows.grouped(chunk).zipWithIndex.map { case (batch, i) => () =>
             stream.addData(batch.map { case (id, t) =>
               SpanStream.Doc(id, t,
                 java.sql.Timestamp.valueOf(f"2024-01-01 10:$i%02d:00"))
             })
-            q.processAllAvailable()
-          }
-        } finally {
-          q.stop()
-          deleteRecursively(ckpt)
-        }
+          })
         // at-least-once on viral spans -> distinct restores exactly-once
-        s.table("st05_spans").select("h", "doc_id").distinct()
+        spans.select("h", "doc_id").distinct()
           .groupBy("doc_id").agg(count(lit(1)).as("n_shared"))
           .orderBy("doc_id")
       },
@@ -676,7 +666,7 @@ object CorpusOps2 {
         // planted ids (1000000+) would land in different splits than
         // their originals if kept, so a state loss cannot hash-cancel.
         // collect() is the MemoryStream feeding harness; production
-        // uses readStream (see st01's note; same 4-state-partition cap).
+        // uses readStream.
         import graft.streaming.CorpusStream
         implicit val sqlCtx = s.sqlContext
         implicit val dEnc = org.apache.spark.sql.Encoders.product[CorpusStream.Doc]
@@ -691,28 +681,18 @@ object CorpusOps2 {
             base.filter(_._1 < 50).map { case (id, t) => (id + 1000000L, t) }).toSeq)
         val stream = org.apache.spark.sql.execution.streaming.runtime
           .MemoryStream[CorpusStream.Doc]
-        val ckpt = java.nio.file.Files.createTempDirectory("st11_ckpt").toString
-        val q = Q.withHarnessPartitions(s) {
-          CorpusStream.prepPipeline(stream.toDS(), watermark = "1 hour")
-            .writeStream.format("memory").queryName("st11_prep")
-            .option("checkpointLocation", ckpt)
-            .outputMode("update").start()
-        }
-        try {
-          batches.zipWithIndex.foreach { case (batch, i) =>
+        val prep = StreamReplay(s,
+            CorpusStream.prepPipeline(stream.toDS(), watermark = "1 hour"),
+            "st11_prep", "update")(
+          batches.zipWithIndex.map { case (batch, i) => () =>
             stream.addData(batch.map { case (id, t) =>
               CorpusStream.Doc(id,
                 java.sql.Timestamp.valueOf(f"2024-01-01 10:$i%02d:00"), t)
             })
-            q.processAllAvailable()
-          }
-        } finally {
-          q.stop()
-          deleteRecursively(ckpt)
-        }
+          })
         // update mode re-emits a split's row per refinement; the counts
         // are monotone, so the max per split is the final running total
-        s.table("st11_prep").groupBy("split")
+        prep.groupBy("split")
           .agg(max("n_docs").as("n_docs"),
             max("total_tokens").as("total_tokens"))
           .orderBy("split")
@@ -1010,17 +990,10 @@ object CorpusOps2 {
         val census = calibrationBins(
           graft.streaming.CorpusStream.learnedQualityStream(
             stream.toDS().toDF("doc_id", "text"), "doc_id", "text", w, 64))
-        val q = Q.withHarnessPartitions(s)(census
-          .writeStream.format("memory").queryName("st41_cal")
-          .outputMode("complete").start())
-        try {
-          val chunk = math.max(1, (rows.length + 1) / 2)
-          rows.grouped(chunk).foreach { batch =>
-            stream.addData(batch.toIndexedSeq)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
-        calibrationAssembly(s.table("st41_cal"))
+        val chunk = math.max(1, (rows.length + 1) / 2)
+        calibrationAssembly(StreamReplay(s, census, "st41_cal", "complete")(
+          rows.grouped(chunk).map(batch => () =>
+            stream.addData(batch.toIndexedSeq))))
       },
       Some(t43OracleSqlWhere("doc_id < 2000"))),
 
@@ -1068,18 +1041,14 @@ object CorpusOps2 {
           .collect().map(r => (r.getLong(0), r.getString(1)))
         val stream = org.apache.spark.sql.execution.streaming.runtime
           .MemoryStream[(Long, String)]
-        val q = graft.streaming.CorpusStream.learnedQualityStream(
-            stream.toDS().toDF("doc_id", "text"), "doc_id", "text", w, dim = 64)
-          .writeStream.format("memory").queryName("st21_scores")
-          .outputMode("append").start()
-        try {
-          val chunk = math.max(1, (rows.length + 1) / 2)
-          rows.grouped(chunk).foreach { batch =>
-            stream.addData(batch.toIndexedSeq)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
-        s.table("st21_scores").orderBy("doc_id")
+        val chunk = math.max(1, (rows.length + 1) / 2)
+        StreamReplay(s,
+            graft.streaming.CorpusStream.learnedQualityStream(
+              stream.toDS().toDF("doc_id", "text"), "doc_id", "text", w, dim = 64),
+            "st21_scores")(
+          rows.grouped(chunk).map(batch => () =>
+            stream.addData(batch.toIndexedSeq)))
+          .orderBy("doc_id")
       },
       Some(t25OracleSqlWhere("doc_id < 2000"))),
 
@@ -1109,24 +1078,13 @@ object CorpusOps2 {
           .collect().map(r => CorpusStream.SourcedDoc(r.getLong(0), r.getString(1)))
         val stream = org.apache.spark.sql.execution.streaming.runtime
           .MemoryStream[CorpusStream.SourcedDoc]
-        val ckpt = java.nio.file.Files.createTempDirectory("st23_ckpt").toString
-        val q = Q.withHarnessPartitions(s) {
-          CorpusStream.quotaAdmission(stream.toDS(), quotas, defaultQuota = 5)
-            .writeStream.format("memory").queryName("st23_admitted")
-            .option("checkpointLocation", ckpt)
-            .outputMode("append").start()
-        }
-        try {
-          val chunk = math.max(1, (rows.length + 1) / 2)
-          rows.grouped(chunk).foreach { batch =>
-            stream.addData(batch.toIndexedSeq)
-            q.processAllAvailable()
-          }
-        } finally {
-          q.stop()
-          deleteRecursively(ckpt)
-        }
-        s.table("st23_admitted").orderBy("doc_id")
+        val chunk = math.max(1, (rows.length + 1) / 2)
+        StreamReplay(s,
+            CorpusStream.quotaAdmission(stream.toDS(), quotas, defaultQuota = 5),
+            "st23_admitted")(
+          rows.grouped(chunk).map(batch => () =>
+            stream.addData(batch.toIndexedSeq)))
+          .orderBy("doc_id")
       },
       Some(s"""WITH quotas(source, quota) AS (VALUES
              |  ${(0 until 20).map(i => s"('src$i', ${5 * (i % 4 + 1)})").mkString(", ")}),
@@ -1182,27 +1140,17 @@ object CorpusOps2 {
           .filter(gate)
           .select(binTok.as("bin"))
           .groupBy("bin").agg(count(lit(1)).as("nc"))
-        // 4 state partitions for the harness — see st01's note (this
-        // census holds <= 10 counter rows; 32 state stores were pure
-        // per-batch commit constant, the r13 idle-drift finding)
-        val q = Q.withHarnessPartitions(s) {
-          counts.writeStream.format("memory").queryName("st24_bins")
-            .outputMode("complete").start()
-        }
-        try {
-          val chunk = math.max(1, (rows.length + 1) / 2)
-          rows.grouped(chunk).foreach { batch =>
-            stream.addData(batch.toIndexedSeq)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
+        val chunk = math.max(1, (rows.length + 1) / 2)
+        val cur = StreamReplay(s, counts, "st24_bins", "complete")(
+          rows.grouped(chunk).map(batch => () =>
+            stream.addData(batch.toIndexedSeq)))
         val ref = refRows.toSeq.toDF("bin", "nr")
         val bins = s.range(0, 10).select(col("id").cast("int").as("bin"))
         bins.join(broadcast(ref), Seq("bin"), "left")
-          .join(broadcast(s.table("st24_bins")), Seq("bin"), "left")
+          .join(broadcast(cur), Seq("bin"), "left")
           .select(coalesce(col("nr"), lit(0L)).as("nr"),
             coalesce(col("nc"), lit(0L)).as("nc"))
-          .crossJoin(s.table("st24_bins").agg(sum("nc").as("tc")))
+          .crossJoin(cur.agg(sum("nc").as("tc")))
           .select(col("nr"), col("nc"),
             ((col("nr") + 1).cast("double") / (tRef + 10)).as("p"),
             ((col("nc") + 1).cast("double") / (col("tc") + 10)).as("q"))
@@ -1286,20 +1234,12 @@ object CorpusOps2 {
           .where(col("n_words") > 0)
           .groupBy("lang")
           .agg(sum("n_words").as("cur_words"), sum("n_tokens").as("cur_tokens"))
-        val q = Q.withHarnessPartitions(s) {
-          counts.writeStream.format("memory").queryName("st39_fert")
-            .outputMode("complete").start()
-        }
-        try {
-          val chunk = math.max(1, (rows.length + 1) / 2)
-          rows.grouped(chunk).foreach { batch =>
-            stream.addData(batch.toIndexedSeq)
-            q.processAllAvailable()
-          }
-          q.processAllAvailable()
-        } finally q.stop()
+        val chunk = math.max(1, (rows.length + 1) / 2)
+        val cur = StreamReplay(s, counts, "st39_fert", "complete")(
+          rows.grouped(chunk).map(batch => () =>
+            stream.addData(batch.toIndexedSeq)))
         val refDf = ref.toSeq.toDF("lang", "ref_words", "ref_tokens")
-        refDf.join(s.table("st39_fert"), Seq("lang"), "full_outer")
+        refDf.join(cur, Seq("lang"), "full_outer")
           .select(col("lang"),
             coalesce(col("ref_words"), lit(0L)).as("ref_words"),
             coalesce(col("ref_tokens"), lit(0L)).as("ref_tokens"),
@@ -1351,18 +1291,14 @@ object CorpusOps2 {
           .collect().map(r => (r.getLong(0), r.getString(1)))
         val stream = org.apache.spark.sql.execution.streaming.runtime
           .MemoryStream[(Long, String)]
-        val q = graft.streaming.CorpusStream.lmScoringStream(
-            stream.toDS().toDF("doc_id", "text"), "doc_id", "text", lm)
-          .writeStream.format("memory").queryName("st25_scores")
-          .outputMode("append").start()
-        try {
-          val chunk = math.max(1, (rows.length + 1) / 2)
-          rows.grouped(chunk).foreach { batch =>
-            stream.addData(batch.toIndexedSeq)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
-        s.table("st25_scores").orderBy("doc_id")
+        val chunk = math.max(1, (rows.length + 1) / 2)
+        StreamReplay(s,
+            graft.streaming.CorpusStream.lmScoringStream(
+              stream.toDS().toDF("doc_id", "text"), "doc_id", "text", lm),
+            "st25_scores")(
+          rows.grouped(chunk).map(batch => () =>
+            stream.addData(batch.toIndexedSeq)))
+          .orderBy("doc_id")
       },
       Some(CorpusOps.lmPerplexityOracleSql("doc_id < 2000"))))
 

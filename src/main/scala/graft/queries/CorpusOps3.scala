@@ -194,18 +194,14 @@ object CorpusOps3 {
           .collect().map(r => (r.getLong(0), r.getString(1)))
         val stream = org.apache.spark.sql.execution.streaming.runtime
           .MemoryStream[(Long, String)]
-        val q = graft.streaming.CorpusStream.dsirScoringStream(
-            stream.toDS().toDF("doc_id", "text"), "doc_id", "text", lam)
-          .writeStream.format("memory").queryName("st26_scores")
-          .outputMode("append").start()
-        try {
-          val chunk = math.max(1, (rows.length + 1) / 2)
-          rows.grouped(chunk).foreach { batch =>
-            stream.addData(batch.toIndexedSeq)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
-        s.table("st26_scores").orderBy("doc_id")
+        val chunk = math.max(1, (rows.length + 1) / 2)
+        StreamReplay(s,
+            graft.streaming.CorpusStream.dsirScoringStream(
+                stream.toDS().toDF("doc_id", "text"), "doc_id", "text", lam),
+            "st26_scores")(
+          rows.grouped(chunk).map(batch => () =>
+            stream.addData(batch.toIndexedSeq)))
+          .orderBy("doc_id")
       },
       Some(dsirOracleSql("doc_id < 2000"))),
 
@@ -507,18 +503,14 @@ object CorpusOps3 {
           .collect().map(r => (r.getLong(0), r.getString(1)))
         val stream = org.apache.spark.sql.execution.streaming.runtime
           .MemoryStream[(Long, String)]
-        val q = graft.streaming.CorpusStream.gopherGateStream(
-            stream.toDS().toDF("doc_id", "text"), "doc_id", "text")
-          .writeStream.format("memory").queryName("st27_gate")
-          .outputMode("append").start()
-        try {
-          val chunk = math.max(1, (rows.length + 1) / 2)
-          rows.grouped(chunk).foreach { batch =>
-            stream.addData(batch.toIndexedSeq)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
-        s.table("st27_gate").orderBy("doc_id")
+        val chunk = math.max(1, (rows.length + 1) / 2)
+        StreamReplay(s,
+            graft.streaming.CorpusStream.gopherGateStream(
+                stream.toDS().toDF("doc_id", "text"), "doc_id", "text"),
+            "st27_gate")(
+          rows.grouped(chunk).map(batch => () =>
+            stream.addData(batch.toIndexedSeq)))
+          .orderBy("doc_id")
       },
       Some("""SELECT doc_id,
              |  CAST(len(w) BETWEEN 50 AND 100000 AS INT) AS wc_ok,
@@ -570,18 +562,14 @@ object CorpusOps3 {
           .collect().map(r => (r.getLong(0), r.getString(1)))
         val stream = org.apache.spark.sql.execution.streaming.runtime
           .MemoryStream[(Long, String)]
-        val q = graft.streaming.CorpusStream.boilerplateGateStream(
-            stream.toDS().toDF("doc_id", "text"), "doc_id", "text", banned)
-          .writeStream.format("memory").queryName("st28_gate")
-          .outputMode("append").start()
-        try {
-          val chunk = math.max(1, (rows.length + 1) / 2)
-          rows.grouped(chunk).foreach { batch =>
-            stream.addData(batch.toIndexedSeq)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
-        s.table("st28_gate").orderBy("doc_id")
+        val chunk = math.max(1, (rows.length + 1) / 2)
+        StreamReplay(s,
+            graft.streaming.CorpusStream.boilerplateGateStream(
+                stream.toDS().toDF("doc_id", "text"), "doc_id", "text", banned),
+            "st28_gate")(
+          rows.grouped(chunk).map(batch => () =>
+            stream.addData(batch.toIndexedSeq)))
+          .orderBy("doc_id")
       },
       Some(s"""WITH corpus AS (SELECT doc_id,
              |    CASE WHEN doc_id % 5 = 0 THEN
@@ -657,22 +645,15 @@ object CorpusOps3 {
           .collect().map(r => (r.getString(0), r.getString(1)))
         val stream = org.apache.spark.sql.execution.streaming.runtime
           .MemoryStream[(String, String)]
-        val q = Q.withHarnessPartitions(s) {
-          graft.ops.Dedup.kmvMixedHashes(
-              stream.toDS().toDF("source", "text"), "source", "text")
-            .groupBy("source")
-            .agg(graft.functions.VectorExpressions.kmvSketch(col("hv"), 128).as("sk"))
-            .writeStream.format("memory").queryName("st35_sketches")
-            .outputMode("complete").start()
-        }
-        try {
-          val chunk = math.max(1, (rows.length + 1) / 2)
-          rows.grouped(chunk).foreach { batch =>
-            stream.addData(batch.toIndexedSeq)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
-        val sk = s.table("st35_sketches")
+        val chunk = math.max(1, (rows.length + 1) / 2)
+        val sk = StreamReplay(s,
+            graft.ops.Dedup.kmvMixedHashes(
+                stream.toDS().toDF("source", "text"), "source", "text")
+              .groupBy("source")
+              .agg(graft.functions.VectorExpressions.kmvSketch(col("hv"), 128).as("sk")),
+            "st35_sketches", "complete")(
+          rows.grouped(chunk).map(batch => () =>
+            stream.addData(batch.toIndexedSeq)))
           .select(col("source"), explode(col("sk")).as("hv"))
         graft.ops.Dedup.kmvOverlapFromSketches(sk, 128)
       },

@@ -821,35 +821,21 @@ object DedupQueries {
           .collect().map(r => (r.getLong(0), r.getString(1)))
         val stream = org.apache.spark.sql.execution.streaming.runtime
           .MemoryStream[DedupStream.Doc]
-        val ckpt = java.nio.file.Files.createTempDirectory("st01_ckpt").toString
-        // state-partition count is captured at stream start: 4 keeps the
-        // per-micro-batch cost at 4 state-store commits instead of
-        // shuffle.partitions-many (the dominant harness cost, ~2 s/batch
-        // at 32); production streams size this to their cluster
-        val q = Q.withHarnessPartitions(s) {
-          DedupStream.candidatePairs(stream.toDS(), watermark = "10 minutes")
-            .writeStream.format("memory").queryName("st01_pairs")
-            .option("checkpointLocation", ckpt)
-            .outputMode("append").start()
-        }
-        try {
-          // two micro-batches: the minimum that still proves cross-batch
-          // bucket state (pairs whose docs arrive in different batches);
-          // each extra batch costs a full state-store commit cycle
-          val chunk = math.max(1, (rows.length + 1) / 2)
-          rows.grouped(chunk).zipWithIndex.foreach { case (batch, i) =>
+        // two micro-batches: the minimum that still proves cross-batch
+        // bucket state (pairs whose docs arrive in different batches);
+        // each extra batch costs a full state-store commit cycle
+        val chunk = math.max(1, (rows.length + 1) / 2)
+        val pairs = StreamReplay(s,
+            DedupStream.candidatePairs(stream.toDS(), watermark = "10 minutes"),
+            "st01_pairs")(
+          rows.grouped(chunk).zipWithIndex.map { case (batch, i) => () =>
             stream.addData(batch.map { case (id, t) =>
               DedupStream.Doc(id, t,
                 java.sql.Timestamp.valueOf(f"2024-01-01 10:$i%02d:00"))
             })
-            q.processAllAvailable()
-          }
-        } finally {
-          q.stop()
-          deleteRecursively(ckpt)
-        }
+          })
         // at-least-once per shared bucket -> distinct restores exactly-once
-        s.table("st01_pairs").select("id_a", "id_b").distinct()
+        pairs.select("id_a", "id_b").distinct()
           .orderBy("id_a", "id_b")
       },
       Some(s"""WITH ${shingleCtes(drop = 3, cap = 500L)},
@@ -887,26 +873,16 @@ object DedupQueries {
         val replays = base.take(60).map { case (id, t) => (id + 2000000L, t) }
         val stream = org.apache.spark.sql.execution.streaming.runtime
           .MemoryStream[DedupStream.Doc]
-        val ckpt = java.nio.file.Files.createTempDirectory("st12_ckpt").toString
-        val q = Q.withHarnessPartitions(s) {
-          DedupStream.firstSeen(stream.toDS(), watermark = "10 minutes")
-            .writeStream.format("memory").queryName("st12_kept")
-            .option("checkpointLocation", ckpt)
-            .outputMode("append").start()
-        }
-        try {
-          Seq(base, replays).zipWithIndex.foreach { case (batch, i) =>
+        StreamReplay(s,
+            DedupStream.firstSeen(stream.toDS(), watermark = "10 minutes"),
+            "st12_kept")(
+          Seq(base, replays).zipWithIndex.map { case (batch, i) => () =>
             stream.addData(batch.map { case (id, t) =>
               DedupStream.Doc(id, t,
                 java.sql.Timestamp.valueOf(f"2024-01-01 10:$i%02d:00"))
             })
-            q.processAllAvailable()
-          }
-        } finally {
-          q.stop()
-          deleteRecursively(ckpt)
-        }
-        s.table("st12_kept").select("doc_id", "fp").distinct()
+          })
+          .select("doc_id", "fp").distinct()
           .orderBy("doc_id")
       },
       Some("""SELECT doc_id, md5(text) AS fp FROM documents
@@ -933,28 +909,18 @@ object DedupQueries {
           .collect().map(r => (r.getLong(0), r.getString(1)))
         val stream = org.apache.spark.sql.execution.streaming.runtime
           .MemoryStream[FuzzyStream.Rec]
-        val ckpt = java.nio.file.Files.createTempDirectory("st13_ckpt").toString
-        val q = Q.withHarnessPartitions(s) {
-          FuzzyStream.matches(stream.toDS(), watermark = "10 minutes")
-            .writeStream.format("memory").queryName("st13_matches")
-            .option("checkpointLocation", ckpt)
-            .outputMode("append").start()
-        }
-        try {
-          val chunk = math.max(1, (rows.length + 1) / 2)
-          rows.grouped(chunk).zipWithIndex.foreach { case (batch, i) =>
+        val chunk = math.max(1, (rows.length + 1) / 2)
+        val matches = StreamReplay(s,
+            FuzzyStream.matches(stream.toDS(), watermark = "10 minutes"),
+            "st13_matches")(
+          rows.grouped(chunk).zipWithIndex.map { case (batch, i) => () =>
             stream.addData(batch.map { case (id, n) =>
               FuzzyStream.Rec(id, n,
                 java.sql.Timestamp.valueOf(f"2024-01-01 10:$i%02d:00"))
             })
-            q.processAllAvailable()
-          }
-        } finally {
-          q.stop()
-          deleteRecursively(ckpt)
-        }
+          })
         // once per shared key -> distinct restores exactly-once
-        s.table("st13_matches").distinct().orderBy("id_a", "id_b")
+        matches.distinct().orderBy("id_a", "id_b")
       },
       Some("""WITH c AS (SELECT c_custkey AS id, c_name AS s FROM customer
              |           WHERE c_custkey < 1000),
@@ -1002,29 +968,19 @@ object DedupQueries {
           .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
         val stream = org.apache.spark.sql.execution.streaming.runtime
           .MemoryStream[SemanticDedupStream.Vec]
-        val ckpt = java.nio.file.Files.createTempDirectory("st04_ckpt").toString
-        val q = Q.withHarnessPartitions(s) {
-          SemanticDedupStream.candidatePairs(stream.toDS(),
-              threshold = 0.3, dim = 64, planes = 12, tables = 4, seed = 5L)
-            .writeStream.format("memory").queryName("st04_pairs")
-            .option("checkpointLocation", ckpt)
-            .outputMode("append").start()
-        }
-        try {
-          val chunk = math.max(1, (rows.length + 1) / 2)
-          rows.grouped(chunk).zipWithIndex.foreach { case (batch, i) =>
+        val chunk = math.max(1, (rows.length + 1) / 2)
+        val pairs = StreamReplay(s,
+            SemanticDedupStream.candidatePairs(stream.toDS(),
+              threshold = 0.3, dim = 64, planes = 12, tables = 4, seed = 5L),
+            "st04_pairs")(
+          rows.grouped(chunk).zipWithIndex.map { case (batch, i) => () =>
             stream.addData(batch.map { case (id, v) =>
               SemanticDedupStream.Vec(id, v,
                 java.sql.Timestamp.valueOf(f"2024-01-01 10:$i%02d:00"))
             })
-            q.processAllAvailable()
-          }
-        } finally {
-          q.stop()
-          deleteRecursively(ckpt)
-        }
+          })
         // at-least-once per shared bucket -> distinct restores exactly-once
-        s.table("st04_pairs")
+        pairs
           .select(least(col("id_a"), col("id_b")).as("id_a"),
             greatest(col("id_a"), col("id_b")).as("id_b"))
           .distinct()
@@ -1217,7 +1173,7 @@ object DedupQueries {
           .collect().map(r => (r.getLong(0), r.getString(1)))
         val stream = org.apache.spark.sql.execution.streaming.runtime
           .MemoryStream[(Long, String)]
-        val q = stream.toDS().toDF("doc_id", "text")
+        val decon = stream.toDS().toDF("doc_id", "text")
           .select(col("doc_id"),
             graft.functions.VectorExpressions
               .ngramHashHits(col("text"), 13, banned).as("nh"))
@@ -1225,16 +1181,11 @@ object DedupQueries {
             element_at(col("nh"), 1).as("total_ngrams"),
             element_at(col("nh"), 2).as("dirty_ngrams"))
           .filter(col("dirty_ngrams") > 0)
-          .writeStream.format("memory").queryName("st40_decon")
-          .outputMode("append").start()
-        try {
-          val chunk = math.max(1, (rows.length + 1) / 2)
-          rows.grouped(chunk).foreach { batch =>
-            stream.addData(batch.toIndexedSeq)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
-        s.table("st40_decon").orderBy("doc_id")
+        val chunk = math.max(1, (rows.length + 1) / 2)
+        StreamReplay(s, decon, "st40_decon")(
+          rows.grouped(chunk).map(batch => () =>
+            stream.addData(batch.toIndexedSeq)))
+          .orderBy("doc_id")
       },
       Some(decontOracleSql("split = 'train' AND doc_id < 2000")))
   )

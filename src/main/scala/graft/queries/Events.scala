@@ -291,26 +291,11 @@ object Events {
           .collect()
         val stream = org.apache.spark.sql.execution.streaming.runtime
           .MemoryStream[EventStreams.Event]
-        val ckpt = java.nio.file.Files.createTempDirectory("st02_ckpt").toString
-        val q = Q.withHarnessPartitions(s) {
-          EventStreams.sessionize(stream.toDS())
-            .writeStream.format("memory").queryName("st02_sessions")
-            .option("checkpointLocation", ckpt)
-            .outputMode("append").start()
-        }
-        try {
-          // two micro-batches: the minimum that still proves cross-batch
-          // session-state carry (sessions spanning the chunk boundary)
-          val chunk = math.max(1, (rows.length + 1) / 2)
-          rows.grouped(chunk).foreach { b =>
-            stream.addData(b.toSeq)
-            q.processAllAvailable()
-          }
-        } finally {
-          q.stop()
-          deleteRecursively(ckpt)
-        }
-        s.table("st02_sessions")
+        // two micro-batches: the minimum that still proves cross-batch
+        // session-state carry (sessions spanning the chunk boundary)
+        val chunk = math.max(1, (rows.length + 1) / 2)
+        StreamReplay(s, EventStreams.sessionize(stream.toDS()), "st02_sessions")(
+          rows.grouped(chunk).map(b => () => stream.addData(b.toSeq)))
           .groupBy("user_id", "session_id")
           .agg(max("n_events").as("n_events"))
           .select(col("user_id"),
@@ -380,30 +365,18 @@ object Events {
           .MemoryStream[AsOfStream.Probe]
         val rStream = org.apache.spark.sql.execution.streaming.runtime
           .MemoryStream[AsOfStream.Ref]
-        val ckpt = java.nio.file.Files.createTempDirectory("st03_ckpt").toString
-        // 4 state partitions for the harness — see st01's note
         // idleExpiry must exceed the corpus's longest view→click gap:
         // the batch oracle has unbounded lookback, and the default 24 h
         // retention dropped ref buffers for users whose prevailing view
         // was days old (15/408 rows nulled). 90 days > the table's span.
-        val q = Q.withHarnessPartitions(s) {
-          AsOfStream.asofJoin(pStream.toDS(), rStream.toDS(),
-              watermark = "1 hour", idleExpiryHours = 90L * 24L)
-            .writeStream.format("memory").queryName("st03_asof")
-            .option("checkpointLocation", ckpt)
-            .outputMode("append").start()
-        }
-        try {
-          Seq(true, false).foreach { firstHalf =>
+        StreamReplay(s,
+            AsOfStream.asofJoin(pStream.toDS(), rStream.toDS(),
+              watermark = "1 hour", idleExpiryHours = 90L * 24L),
+            "st03_asof")(
+          Seq(true, false).map { firstHalf => () =>
             rStream.addData(refs.filter(r => (r.ts.getTime <= thr) == firstHalf).toSeq)
             pStream.addData(probes.filter(p => (p.ts.getTime <= thr) == firstHalf).toSeq)
-            q.processAllAvailable()
-          }
-        } finally {
-          q.stop()
-          deleteRecursively(ckpt)
-        }
-        s.table("st03_asof")
+          })
           .select(col("probe_id").as("event_id"), col("key").as("user_id"),
             col("ref_payload").cast("long").as("view_id"))
           .orderBy("event_id")
@@ -465,24 +438,13 @@ object Events {
           .MemoryStream[EventStreams.Event]
         val pStream = org.apache.spark.sql.execution.streaming.runtime
           .MemoryStream[EventStreams.Event]
-        val ckpt = java.nio.file.Files.createTempDirectory("st14_ckpt").toString
-        val q = Q.withHarnessPartitions(s) {
-          EventStreams.attributionJoin(cStream.toDF(), pStream.toDF())
-            .writeStream.format("memory").queryName("st14_pairs")
-            .option("checkpointLocation", ckpt)
-            .outputMode("append").start()
-        }
-        try {
-          Seq(true, false).foreach { firstHalf =>
+        StreamReplay(s,
+            EventStreams.attributionJoin(cStream.toDF(), pStream.toDF()),
+            "st14_pairs")(
+          Seq(true, false).map { firstHalf => () =>
             cStream.addData(clicks.filter(c => (c.ts.getTime <= thr) == firstHalf).toSeq)
             pStream.addData(purchases.filter(p => (p.ts.getTime <= thr) == firstHalf).toSeq)
-            q.processAllAvailable()
-          }
-        } finally {
-          q.stop()
-          deleteRecursively(ckpt)
-        }
-        s.table("st14_pairs")
+          })
           .select(col("user_id"), col("purchase_id"), col("click_id"),
             unix_micros(col("purchase_ts")).as("p_us"),
             unix_micros(col("click_ts")).as("c_us"),
@@ -534,30 +496,16 @@ object Events {
         val maxTs = rows.last.ts.getTime
         val stream = org.apache.spark.sql.execution.streaming.runtime
           .MemoryStream[EventStreams.Event]
-        val ckpt = java.nio.file.Files.createTempDirectory("st16_ckpt").toString
-        val q = Q.withHarnessPartitions(s) {
-          EventStreams.enrichedSegmentTotals(stream.toDF(), dim)
-            .writeStream.format("memory").queryName("st16_segments")
-            .option("checkpointLocation", ckpt)
-            .outputMode("append").start()
-        }
-        try {
-          val half = (rows.length + 1) / 2
-          stream.addData(rows.take(half).toIndexedSeq)
-          q.processAllAvailable()
-          stream.addData(rows.drop(half).toIndexedSeq)
-          q.processAllAvailable()
-          for (off <- Seq(72L, 73L)) {
+        val half = (rows.length + 1) / 2
+        StreamReplay(s, EventStreams.enrichedSegmentTotals(stream.toDF(), dim),
+            "st16_segments")(
+          Seq(rows.take(half), rows.drop(half))
+            .map(b => () => stream.addData(b.toIndexedSeq)) ++
+          Seq(72L, 73L).map(off => () =>
             stream.addData(IndexedSeq(EventStreams.Event(-1L,
               new java.sql.Timestamp(maxTs + off * 3600L * 1000L),
-              0L, "flush", 0.0)))
-            q.processAllAvailable()
-          }
-        } finally {
-          q.stop()
-          deleteRecursively(ckpt)
-        }
-        s.table("st16_segments").orderBy("segment", "start_us")
+              0L, "flush", 0.0)))))
+          .orderBy("segment", "start_us")
       },
       Some("""SELECT c.c_mktsegment AS segment,
              |  epoch_us(date_trunc('hour', e.ts)) AS start_us,
@@ -602,25 +550,18 @@ object Events {
         val dimKeys = Tables(s, dir).customer.select(col("c_custkey"))
         val stream = org.apache.spark.sql.execution.streaming.runtime
           .MemoryStream[EventStreams.Event]
-        val q = Q.withHarnessPartitions(s) {
-          stream.toDF()
-            .join(broadcast(dimKeys), col("user_id") === col("c_custkey"), "left")
-            .groupBy("event_type")
-            .agg(count(lit(1)).as("n_events"),
-              sum(when(col("c_custkey").isNull, 1L).otherwise(0L)).as("fk_orphans"),
-              sum(when(col("value") < 0, 1L).otherwise(0L)).as("range_violations"))
-            .writeStream.format("memory").queryName("st20_quality")
-            .outputMode("complete").start()
-        }
-        try {
-          val half = (rows.length + 1) / 2
-          stream.addData(rows.take(half).toIndexedSeq)
-          q.processAllAvailable()
-          stream.addData(rows.drop(half).toIndexedSeq)
-          q.processAllAvailable()
-        } finally q.stop()
+        val audit = stream.toDF()
+          .join(broadcast(dimKeys), col("user_id") === col("c_custkey"), "left")
+          .groupBy("event_type")
+          .agg(count(lit(1)).as("n_events"),
+            sum(when(col("c_custkey").isNull, 1L).otherwise(0L)).as("fk_orphans"),
+            sum(when(col("value") < 0, 1L).otherwise(0L)).as("range_violations"))
+        val half = (rows.length + 1) / 2
         // complete mode: the table IS the final snapshot
-        s.table("st20_quality").orderBy("event_type")
+        StreamReplay(s, audit, "st20_quality", "complete")(
+          Seq(rows.take(half), rows.drop(half))
+            .map(b => () => stream.addData(b.toIndexedSeq)))
+          .orderBy("event_type")
       },
       Some("""WITH m AS (SELECT event_id, event_type,
              |    CASE WHEN event_id % 83 = 0 THEN -1 ELSE user_id END AS user_id,
@@ -698,41 +639,28 @@ object Events {
         val maxTs = rows.last._2.getTime
         val stream = org.apache.spark.sql.execution.streaming.runtime
           .MemoryStream[(Long, java.sql.Timestamp)]
-        val ckpt = java.nio.file.Files.createTempDirectory("st09_ckpt").toString
+        val windows = stream.toDS().toDF("event_id", "ts")
+          .withWatermark("ts", "1 hour")
+          .groupBy(window(col("ts"), "1 hour").as("w"))
+          .agg(count(lit(1)).as("n_events"))
+          .select(unix_micros(col("w.start")).as("start_us"), col("n_events"))
+        val half = (rows.length + 1) / 2
         // keepNoDataBatches: the late-replay drop this query PROVES
         // needs the default regime's no-data batch to bake the
         // advanced watermark in before the replays arrive (see
-        // Q.withHarnessPartitions)
-        val q = Q.withHarnessPartitions(s, keepNoDataBatches = true) {
-          stream.toDS().toDF("event_id", "ts")
-            .withWatermark("ts", "1 hour")
-            .groupBy(window(col("ts"), "1 hour").as("w"))
-            .agg(count(lit(1)).as("n_events"))
-            .select(unix_micros(col("w.start")).as("start_us"), col("n_events"))
-            .writeStream.format("memory").queryName("st09_windows")
-            .option("checkpointLocation", ckpt)
-            .outputMode("append").start()
-        }
-        try {
-          val half = (rows.length + 1) / 2
-          stream.addData(rows.take(half).toIndexedSeq)
-          q.processAllAvailable()
-          // batch 2: the on-time second half + 50 LATE replays
-          stream.addData((rows.drop(half) ++ rows.take(50)).toIndexedSeq)
-          q.processAllAvailable()
+        // StreamReplay)
+        StreamReplay(s, windows, "st09_windows", keepNoDataBatches = true)(
+          Seq(rows.take(half),
+            // batch 2: the on-time second half + 50 LATE replays
+            rows.drop(half) ++ rows.take(50))
+            .map(b => () => stream.addData(b.toIndexedSeq)) ++
           // two flush batches: one advances the max event time, the
           // next batch's processing emits everything below the new
           // watermark (emission uses the PREVIOUS batch's watermark)
-          for (off <- Seq(72L, 73L)) {
+          Seq(72L, 73L).map(off => () =>
             stream.addData(IndexedSeq(
-              (-1L, new java.sql.Timestamp(maxTs + off * 3600L * 1000L))))
-            q.processAllAvailable()
-          }
-        } finally {
-          q.stop()
-          deleteRecursively(ckpt)
-        }
-        s.table("st09_windows").orderBy("start_us")
+              (-1L, new java.sql.Timestamp(maxTs + off * 3600L * 1000L))))))
+          .orderBy("start_us")
       },
       // every slice event counted exactly once — replays dropped
       Some("""SELECT epoch_us(date_trunc('hour', ts)) AS start_us,
@@ -763,22 +691,14 @@ object Events {
           .collect().map(r => (r.getLong(0), r.getDouble(1)))
         val stream = org.apache.spark.sql.execution.streaming.runtime
           .MemoryStream[(Long, Double)]
-        val q = Q.withHarnessPartitions(s) {
-          stream.toDS().toDF("event_id", "value")
-            .select(col("event_id"),
-              floor(col("value") * 100 + lit(0.5)).cast("long").as("cents"))
-            .agg(topKByScore(col("event_id"), col("cents"), 100).as("topk"))
-            .writeStream.format("memory").queryName("st10_topk")
-            .outputMode("complete").start()
-        }
-        try {
-          val chunk = math.max(1, (rows.length + 1) / 2)
-          rows.grouped(chunk).foreach { batch =>
-            stream.addData(batch.toIndexedSeq)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
-        s.table("st10_topk")
+        val topk = stream.toDS().toDF("event_id", "value")
+          .select(col("event_id"),
+            floor(col("value") * 100 + lit(0.5)).cast("long").as("cents"))
+          .agg(topKByScore(col("event_id"), col("cents"), 100).as("topk"))
+        val chunk = math.max(1, (rows.length + 1) / 2)
+        StreamReplay(s, topk, "st10_topk", "complete")(
+          rows.grouped(chunk).map(batch => () =>
+            stream.addData(batch.toIndexedSeq)))
           .select(posexplode(col("topk")).as(Seq("pos", "nb")))
           .select((col("pos") + 1).cast("int").as("rank"),
             col("nb.id").as("event_id"),
@@ -1347,36 +1267,22 @@ object Events {
         val maxTsMs = rows.map(_.ts.getTime).max
         val stream = org.apache.spark.sql.execution.streaming.runtime
           .MemoryStream[EventStreams.Event]
-        val ckpt = java.nio.file.Files.createTempDirectory("st32_ckpt").toString
-        val q = Q.withHarnessPartitions(s) {
-          EventStreams.markovCensusStream(stream.toDS(), MarkovChannels)
-            .toDF()
-            .writeStream.format("memory").queryName("st32_edges")
-            .option("checkpointLocation", ckpt)
-            .outputMode("append").start()
-        }
-        try {
-          val chunk = math.max(1, (rows.length + 1) / 2)
-          rows.grouped(chunk).foreach { batch =>
-            stream.addData(batch.toIndexedSeq)
-            q.processAllAvailable()
-          }
+        val chunk = math.max(1, (rows.length + 1) / 2)
+        val edges = StreamReplay(s,
+            EventStreams.markovCensusStream(stream.toDS(), MarkovChannels),
+            "st32_edges")(
+          rows.grouped(chunk).map(batch => () =>
+            stream.addData(batch.toIndexedSeq)) ++
           // two watermark-advancing sentinel batches (st09's flush
           // pattern): the first moves the watermark past every
           // journey's close-out; the second's processing fires the
           // timeouts that emit the final drop edges
-          for (off <- Seq(100L, 101L)) {
+          Seq(100L, 101L).map(off => () =>
             stream.addData(IndexedSeq(EventStreams.Event(-1L,
               new java.sql.Timestamp(maxTsMs + off * 3600L * 1000L),
-              -1L, "noop", 0.0)))
-            q.processAllAvailable()
-          }
-        } finally {
-          q.stop()
-          deleteRecursively(ckpt)
-        }
+              -1L, "noop", 0.0)))))
         val tppm = {
-          val trans = s.table("st32_edges")
+          val trans = edges
             .groupBy("src", "dst").agg(count(lit(1)).as("c"))
           // explicit re-alias: the memory-sink table's self-derived
           // attributes collide under the bare string-key join
@@ -1884,32 +1790,20 @@ object Events {
           .MemoryStream[EventStreams.Event]
         val pStream = org.apache.spark.sql.execution.streaming.runtime
           .MemoryStream[EventStreams.Event]
-        val ckpt = java.nio.file.Files.createTempDirectory("st33_ckpt").toString
-        val q = Q.withHarnessPartitions(s) {
-          EventStreams.attributionJoin(cStream.toDF(), pStream.toDF(),
-              leftOuter = true)
-            .writeStream.format("memory").queryName("st33_pairs")
-            .option("checkpointLocation", ckpt)
-            .outputMode("append").start()
-        }
-        try {
-          Seq(true, false).foreach { firstHalf =>
+        StreamReplay(s,
+            EventStreams.attributionJoin(cStream.toDF(), pStream.toDF(),
+              leftOuter = true),
+            "st33_pairs")(
+          Seq(true, false).map { firstHalf => () =>
             cStream.addData(clicks.filter(c => (c.ts.getTime <= thr) == firstHalf).toSeq)
             pStream.addData(purchases.filter(p => (p.ts.getTime <= thr) == firstHalf).toSeq)
-            q.processAllAvailable()
-          }
-          for (off <- Seq(72L, 73L)) {
+          } ++
+          Seq(72L, 73L).map { off => () =>
             val sentinel = EventStreams.Event(-1L,
               new java.sql.Timestamp(maxTs + off * 3600L * 1000L), -1L, "noop", 0.0)
             cStream.addData(IndexedSeq(sentinel))
             pStream.addData(IndexedSeq(sentinel))
-            q.processAllAvailable()
-          }
-        } finally {
-          q.stop()
-          deleteRecursively(ckpt)
-        }
-        s.table("st33_pairs")
+          })
           .filter(col("user_id") >= 0)
           .select(col("user_id"), col("purchase_id"), col("click_id"),
             unix_micros(col("purchase_ts")).as("p_us"),

@@ -617,20 +617,16 @@ object GPQueries {
           .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
         val stream = org.apache.spark.sql.execution.streaming.runtime
           .MemoryStream[(Long, Array[Double])]
-        val q = model.transform(stream.toDS().toDF("vec_id", "features"))
-          .select(col("vec_id"),
-            fround(col("prediction"), 6).as("mean"),
-            fround(col("std"), 6).as("std"))
-          .writeStream.format("memory").queryName("st08_gp")
-          .outputMode("append").start()
-        try {
-          val chunk = math.max(1, (rows.length + 1) / 2)
-          rows.grouped(chunk).foreach { batch =>
-            stream.addData(batch.toIndexedSeq)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
-        s.table("st08_gp").orderBy("vec_id")
+        val chunk = math.max(1, (rows.length + 1) / 2)
+        StreamReplay(s,
+            model.transform(stream.toDS().toDF("vec_id", "features"))
+              .select(col("vec_id"),
+                fround(col("prediction"), 6).as("mean"),
+                fround(col("std"), 6).as("std")),
+            "st08_gp")(
+          rows.grouped(chunk).map(batch => () =>
+            stream.addData(batch.toIndexedSeq)))
+          .orderBy("vec_id")
       },
       Some(gp06OracleSql))
   )

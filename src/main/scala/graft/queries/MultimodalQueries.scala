@@ -488,24 +488,12 @@ object MultimodalQueries {
             new java.sql.Timestamp(1700000000000L + r.media_id * 1000L), r.img))
         val stream = org.apache.spark.sql.execution.streaming.runtime
           .MemoryStream[MediaStream.MediaArrival]
-        val ckpt = java.nio.file.Files.createTempDirectory("st15_ckpt").toString
-        val q = Q.withHarnessPartitions(s) {
-          MediaStream.firstSeenImages(stream.toDS(), watermark = "24 hours")
-            .writeStream.format("memory").queryName("st15_survivors")
-            .option("checkpointLocation", ckpt)
-            .outputMode("append").start()
-        }
-        try {
-          val chunk = math.max(1, (rows.length + 1) / 2)
-          rows.grouped(chunk).foreach { b =>
-            stream.addData(b.toSeq)
-            q.processAllAvailable()
-          }
-        } finally {
-          q.stop()
-          deleteRecursively(ckpt)
-        }
-        s.table("st15_survivors").orderBy("media_id")
+        val chunk = math.max(1, (rows.length + 1) / 2)
+        StreamReplay(s,
+            MediaStream.firstSeenImages(stream.toDS(), watermark = "24 hours"),
+            "st15_survivors")(
+          rows.grouped(chunk).map(b => () => stream.addData(b.toSeq)))
+          .orderBy("media_id")
       },
       // mm11's ahash replay; first-seen on an id-ordered feed = the
       // minimum media_id per hash value
@@ -712,24 +700,13 @@ object MultimodalQueries {
             new java.sql.Timestamp(1700000000000L + r.media_id * 1000L), r.avi))
         val stream = org.apache.spark.sql.execution.streaming.runtime
           .MemoryStream[MediaStream.MediaArrival]
-        val ckpt = java.nio.file.Files.createTempDirectory("st22_ckpt").toString
-        val q = Q.withHarnessPartitions(s) {
-          MediaStream.firstSeenVideos(stream.toDS(), watermark = "24 hours")
-            .writeStream.format("memory").queryName("st22_survivors")
-            .option("checkpointLocation", ckpt)
-            .outputMode("append").start()
-        }
-        try {
-          val (bases, copyRows) = rows.partition(_.media_id < 150)
-          Seq(bases, copyRows).filter(_.nonEmpty).foreach { b =>
-            stream.addData(b.toSeq)
-            q.processAllAvailable()
-          }
-        } finally {
-          q.stop()
-          deleteRecursively(ckpt)
-        }
-        s.table("st22_survivors").orderBy("media_id")
+        val (bases, copyRows) = rows.partition(_.media_id < 150)
+        StreamReplay(s,
+            MediaStream.firstSeenVideos(stream.toDS(), watermark = "24 hours"),
+            "st22_survivors")(
+          Seq(bases, copyRows).filter(_.nonEmpty)
+            .map(b => () => stream.addData(b.toSeq)))
+          .orderBy("media_id")
       },
       // mm13's per-frame hash replay; signature = sorted distinct frame
       // hashes joined '-'; first-seen on an id-ordered feed = minimum

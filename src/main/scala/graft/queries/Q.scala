@@ -17,48 +17,6 @@ final case class Q(
     oracle: Option[String] = None)
 
 object Q {
-  /** Run `body` — typically a streaming-query `.start()` — with the
-    * session's shuffle partitions pinned to 4, the streaming-HARNESS
-    * state-partition cap: every MemoryStream harness here holds at
-    * most a handful of state rows, and 32 state stores per
-    * micro-batch were pure commit constant (the r13 idle-drift
-    * finding; restored in a finally so a failed start cannot leak the
-    * cap into the surrounding batch queries).
-    *
-    * Also disables no-data micro-batches for the started query: the
-    * harnesses advance the watermark with explicit sentinel DATA
-    * batches (emission uses the previous batch's watermark — that is
-    * why there are TWO sentinel rounds), so the extra no-data batches
-    * Spark schedules after each watermark change only re-pay the
-    * state-store commit constant without ever emitting a row the next
-    * data batch would not (r17 St33Probe: 10 → 6 micro-batches,
-    * 10.0 → 6.8 s, bit-identical 6782-row output; every stateful st
-    * query stays oracle-green). A streaming query snapshots the
-    * session conf at start, so restoring in the finally cannot affect
-    * the already-started stream.
-    *
-    * `keepNoDataBatches = true` opts a query back into the default
-    * regime: st09's LATE-REPLAY drop needs the no-data batch between
-    * its two data batches to bake the advanced watermark in before
-    * the replays arrive (without it the replayed events were counted
-    * twice — 605 of 620 windows doubled at sf0.01); late-data
-    * semantics under the DEFAULT execution regime is exactly what
-    * st09 exists to prove, so it keeps that regime. */
-  def withHarnessPartitions[T](s: SparkSession,
-      keepNoDataBatches: Boolean = false)(body: => T): T = {
-    val saved = s.conf.get("spark.sql.shuffle.partitions")
-    val savedNoData =
-      s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    if (!keepNoDataBatches)
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try body
-    finally {
-      s.conf.set("spark.sql.shuffle.partitions", saved)
-      s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", savedNoData)
-    }
-  }
-
   /** All registered queries, in stable order. */
   def all: Seq[Q] =
     Relational.queries ++ Relational2.queries ++ Windows.queries ++ Windows2.queries ++

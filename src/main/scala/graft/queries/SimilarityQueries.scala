@@ -1160,21 +1160,15 @@ object SimilarityQueries {
           .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
         val stream = org.apache.spark.sql.execution.streaming.runtime
           .MemoryStream[(Long, Array[Double])]
-        val q = Q.withHarnessPartitions(s) {
-          VectorSearchStream.probeStream(
-              stream.toDS().toDF("vec_id", "embedding"),
-              "vec_id", "embedding", lists, centers, nprobe = 6, k = 5)
-            .writeStream.format("memory").queryName("st17_hits")
-            .outputMode("append").start()
-        }
-        try {
-          val chunk = math.max(1, (rows.length + 1) / 2)
-          rows.grouped(chunk).foreach { batch =>
-            stream.addData(batch.toIndexedSeq)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
-        s.table("st17_hits").groupBy("query_id")
+        val chunk = math.max(1, (rows.length + 1) / 2)
+        StreamReplay(s,
+            VectorSearchStream.probeStream(
+                stream.toDS().toDF("vec_id", "embedding"),
+                "vec_id", "embedding", lists, centers, nprobe = 6, k = 5),
+            "st17_hits")(
+          rows.grouped(chunk).map(batch => () =>
+            stream.addData(batch.toIndexedSeq)))
+          .groupBy("query_id")
           .agg(graft.functions.VectorExpressions
             .topKByScore(col("neighbor_id"), col("cos"), 5).as("topk"))
           .select(col("query_id"), posexplode(col("topk")).as(Seq("pos", "nb")))

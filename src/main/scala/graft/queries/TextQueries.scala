@@ -458,19 +458,15 @@ object TextQueries {
           .collect().map(r => (r.getLong(0), r.getString(1)))
         val stream = org.apache.spark.sql.execution.streaming.runtime
           .MemoryStream[(Long, String)]
-        val q = CorpusStream.contaminationGate(
-            stream.toDS().toDF("doc_id", "text"), "text", benchSet, n = 4)
-          .select("doc_id")
-          .writeStream.format("memory").queryName("st18_clean")
-          .outputMode("append").start()
-        try {
-          val chunk = math.max(1, (rows.length + 1) / 2)
-          rows.grouped(chunk).foreach { batch =>
-            stream.addData(batch.toIndexedSeq)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
-        s.table("st18_clean").orderBy("doc_id")
+        val chunk = math.max(1, (rows.length + 1) / 2)
+        StreamReplay(s,
+            CorpusStream.contaminationGate(
+                stream.toDS().toDF("doc_id", "text"), "text", benchSet, n = 4)
+              .select("doc_id"),
+            "st18_clean")(
+          rows.grouped(chunk).map(batch => () =>
+            stream.addData(batch.toIndexedSeq)))
+          .orderBy("doc_id")
       },
       Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
              |ng AS (SELECT doc_id, unnest(list_transform(range(1, len(w) - 4 + 2),
@@ -517,19 +513,15 @@ object TextQueries {
           .collect().map(r => (r.getLong(0), r.getString(1)))
         val stream = org.apache.spark.sql.execution.streaming.runtime
           .MemoryStream[(Long, String)]
-        val q = CorpusStream.contaminationScoreStream(
-            stream.toDS().toDF("doc_id", "text"), "doc_id", "text",
-            grams, n = 4)
-          .writeStream.format("memory").queryName("st19_scores")
-          .outputMode("append").start()
-        try {
-          val chunk = math.max(1, (rows.length + 1) / 2)
-          rows.grouped(chunk).foreach { batch =>
-            stream.addData(batch.toIndexedSeq)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
-        s.table("st19_scores").orderBy("doc_id")
+        val chunk = math.max(1, (rows.length + 1) / 2)
+        StreamReplay(s,
+            CorpusStream.contaminationScoreStream(
+                stream.toDS().toDF("doc_id", "text"), "doc_id", "text",
+                grams, n = 4),
+            "st19_scores")(
+          rows.grouped(chunk).map(batch => () =>
+            stream.addData(batch.toIndexedSeq)))
+          .orderBy("doc_id")
       },
       Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
              |ng AS (SELECT doc_id, unnest(list_transform(range(1, len(w) - 4 + 2),
@@ -658,21 +650,13 @@ object TextQueries {
             r.getLong(0), r.getString(1), r.getLong(2)))
         val stream = org.apache.spark.sql.execution.streaming.runtime
           .MemoryStream[graft.streaming.CorpusStream.PackInDoc]
-        val q = Q.withHarnessPartitions(s) {
-          graft.streaming.CorpusStream
-            .packingStream(stream.toDS(), budget = 512, buckets = 4)
-            .toDF()
-            .writeStream.format("memory").queryName("st31_packed")
-            .outputMode("append").start()
-        }
-        try {
-          val chunk = math.max(1, (rows.length + 1) / 2)
-          rows.grouped(chunk).foreach { batch =>
-            stream.addData(batch.toIndexedSeq)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
-        s.table("st31_packed")
+        val chunk = math.max(1, (rows.length + 1) / 2)
+        StreamReplay(s,
+            graft.streaming.CorpusStream
+              .packingStream(stream.toDS(), budget = 512, buckets = 4),
+            "st31_packed")(
+          rows.grouped(chunk).map(batch => () =>
+            stream.addData(batch.toIndexedSeq)))
           .select("source", "bucket", "doc_id", "n_tokens",
             "first_chunk", "last_chunk")
           .orderBy("source", "bucket", "doc_id")
@@ -734,24 +718,18 @@ object TextQueries {
           .collect().map(r => (r.getString(1), r.getString(2)))
         val stream = org.apache.spark.sql.execution.streaming.runtime
           .MemoryStream[(String, String)]
-        val q = Q.withHarnessPartitions(s) {
-          stream.toDS().toDF("lang", "text")
-            .select(col("lang"), explode(tokens(col("text"))).as("tok"))
-            .select(col("lang"), md5Hash52(col("tok")).as("h"))
-            .groupBy("lang")
-            .agg(fround(hllDistinct(col("h")), 2).as("approx_distinct"))
-            .writeStream.format("memory").queryName("st06_hll")
-            .outputMode("complete").start()
-        }
-        try {
-          val chunk = math.max(1, (rows.length + 1) / 2)
-          rows.grouped(chunk).foreach { batch =>
-            stream.addData(batch.toIndexedSeq)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
+        val chunk = math.max(1, (rows.length + 1) / 2)
         // complete mode: the table IS the final snapshot
-        s.table("st06_hll").orderBy("lang")
+        StreamReplay(s,
+            stream.toDS().toDF("lang", "text")
+              .select(col("lang"), explode(tokens(col("text"))).as("tok"))
+              .select(col("lang"), md5Hash52(col("tok")).as("h"))
+              .groupBy("lang")
+              .agg(fround(hllDistinct(col("h")), 2).as("approx_distinct")),
+            "st06_hll", "complete")(
+          rows.grouped(chunk).map(batch => () =>
+            stream.addData(batch.toIndexedSeq)))
+          .orderBy("lang")
       },
       // t10's register/harmonic-sum/linear-counting replay, restricted
       // to the streamed slice and without the exact column (streaming
@@ -819,24 +797,18 @@ object TextQueries {
           .select(concat_ws(" ",
             element_at(col("toks"), col("pos")),
             element_at(col("toks"), col("pos") + 1)).as("bigram"))
-        val q = Q.withHarnessPartitions(s) {
-          bigramsOf(stream.toDS().toDF("text"))
-            .agg(cmsSketch(polyHash(col("bigram"))).as("sk"))
-            .writeStream.format("memory").queryName("st07_cms")
-            .outputMode("complete").start()
-        }
-        try {
-          val chunk = math.max(1, (rows.length + 1) / 2)
-          rows.grouped(chunk).foreach { batch =>
-            stream.addData(batch.toIndexedSeq)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
+        val chunk = math.max(1, (rows.length + 1) / 2)
+        val sketch = StreamReplay(s,
+            bigramsOf(stream.toDS().toDF("text"))
+              .agg(cmsSketch(polyHash(col("bigram"))).as("sk")),
+            "st07_cms", "complete")(
+          rows.grouped(chunk).map(batch => () =>
+            stream.addData(batch.toIndexedSeq)))
         bigramsOf(Tables(s, dir).documents.filter(col("doc_id") < 500))
           .groupBy("bigram").agg(count(lit(1)).as("exact_cnt"))
           .orderBy(col("exact_cnt").desc, col("bigram"))
           .limit(10)
-          .crossJoin(broadcast(s.table("st07_cms")))
+          .crossJoin(broadcast(sketch))
           .select(col("bigram"), col("exact_cnt"),
             cmsEstimate(col("sk"), polyHash(col("bigram"))).as("est_cnt"))
           .orderBy(col("exact_cnt").desc, col("bigram"))

@@ -89,20 +89,16 @@ object UnigramQueries {
           .collect().map(r => (r.getLong(0), r.getString(1)))
         val stream = org.apache.spark.sql.execution.streaming.runtime
           .MemoryStream[(Long, String)]
-        val q = graft.ops.Unigram.pieceCounts(
-            stream.toDS().toDF("c_custkey", "c_name"),
-            "c_custkey", "c_name", UnigramPieces)
-          .filter(col("n_words") > 0)
-          .writeStream.format("memory").queryName("st34_pieces")
-          .outputMode("append").start()
-        try {
-          val chunk = math.max(1, (rows.length + 1) / 2)
-          rows.grouped(chunk).foreach { batch =>
-            stream.addData(batch.toIndexedSeq)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
-        s.table("st34_pieces").orderBy("c_custkey")
+        val chunk = math.max(1, (rows.length + 1) / 2)
+        StreamReplay(s,
+            graft.ops.Unigram.pieceCounts(
+                stream.toDS().toDF("c_custkey", "c_name"),
+                "c_custkey", "c_name", UnigramPieces)
+              .filter(col("n_words") > 0),
+            "st34_pieces")(
+          rows.grouped(chunk).map(batch => () =>
+            stream.addData(batch.toIndexedSeq)))
+          .orderBy("c_custkey")
       },
       Some(st34OracleSql)),
 
@@ -127,20 +123,16 @@ object UnigramQueries {
           .collect().map(r => (r.getLong(0), r.getString(1)))
         val stream = org.apache.spark.sql.execution.streaming.runtime
           .MemoryStream[(Long, String)]
-        val q = graft.ops.Unigram.pieceCountsSampled(
-            stream.toDS().toDF("c_custkey", "c_name"),
-            "c_custkey", "c_name", UnigramPieces)
-          .filter(col("n_words") > 0)
-          .writeStream.format("memory").queryName("st36_pieces")
-          .outputMode("append").start()
-        try {
-          val chunk = math.max(1, (rows.length + 1) / 2)
-          rows.grouped(chunk).foreach { batch =>
-            stream.addData(batch.toIndexedSeq)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
-        s.table("st36_pieces").orderBy("c_custkey")
+        val chunk = math.max(1, (rows.length + 1) / 2)
+        StreamReplay(s,
+            graft.ops.Unigram.pieceCountsSampled(
+                stream.toDS().toDF("c_custkey", "c_name"),
+                "c_custkey", "c_name", UnigramPieces)
+              .filter(col("n_words") > 0),
+            "st36_pieces")(
+          rows.grouped(chunk).map(batch => () =>
+            stream.addData(batch.toIndexedSeq)))
+          .orderBy("c_custkey")
       },
       Some(st36OracleSql)),
 

@@ -90,20 +90,16 @@ object WordPieceQueries {
           .collect().map(r => (r.getLong(0), r.getString(1)))
         val stream = org.apache.spark.sql.execution.streaming.runtime
           .MemoryStream[(Long, String)]
-        val q = graft.ops.WordPiece.tokenCounts(
-            stream.toDS().toDF("c_custkey", "c_name"),
-            "c_custkey", "c_name", WordPieceVocab, MaxPieceLen)
-          .filter(col("n_words") > 0)
-          .writeStream.format("memory").queryName("st37_pieces")
-          .outputMode("append").start()
-        try {
-          val chunk = math.max(1, (rows.length + 1) / 2)
-          rows.grouped(chunk).foreach { batch =>
-            stream.addData(batch.toIndexedSeq)
-            q.processAllAvailable()
-          }
-        } finally q.stop()
-        s.table("st37_pieces").orderBy("c_custkey")
+        val chunk = math.max(1, (rows.length + 1) / 2)
+        StreamReplay(s,
+            graft.ops.WordPiece.tokenCounts(
+                stream.toDS().toDF("c_custkey", "c_name"),
+                "c_custkey", "c_name", WordPieceVocab, MaxPieceLen)
+              .filter(col("n_words") > 0),
+            "st37_pieces")(
+          rows.grouped(chunk).map(batch => () =>
+            stream.addData(batch.toIndexedSeq)))
+          .orderBy("c_custkey")
       },
       Some(st37OracleSql)))
 

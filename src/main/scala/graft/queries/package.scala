@@ -20,8 +20,8 @@ package object queries {
     floor(c * lit(p) + lit(0.5)) / lit(p)
   }
 
-  /** Best-effort recursive delete for the streaming harnesses' temp
-    * checkpoint dirs (st01/st02) — repeated bench/verify sweeps must
+  /** Best-effort recursive delete for temp dirs ([[StreamReplay]]'s
+    * checkpoints, layout scratch) — repeated bench/verify sweeps must
     * not accumulate state under /tmp. */
   def deleteRecursively(path: String): Unit = {
     import java.nio.file.{Files, Paths}

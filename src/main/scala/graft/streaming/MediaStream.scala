@@ -25,7 +25,9 @@ object MediaStream {
   /** One arriving media blob. */
   final case class MediaArrival(media_id: Long, ts: Timestamp, img: Array[Byte])
 
-  private final case class HashedArrival(media_id: Long, ts: Timestamp, ahash: Long)
+  // Public: generated code calls the accessors directly, and a private
+  // class fails codegen and falls back to the interpreter.
+  final case class HashedArrival(media_id: Long, ts: Timestamp, ahash: Long)
 
   /**
    * FIRST-SEEN streaming image dedup on the PERCEPTUAL hash: each
@@ -51,7 +53,7 @@ object MediaStream {
       .select(col("media_id"), col("ahash"))
   }
 
-  private final case class SignedArrival(media_id: Long, ts: Timestamp, sig: String)
+  final case class SignedArrival(media_id: Long, ts: Timestamp, sig: String)
 
   /**
    * FIRST-SEEN streaming VIDEO dedup — [[firstSeenImages]]' gate at

@@ -44,10 +44,11 @@ object Canary {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val reps = sys.env.getOrElse("SPARK_GRAFT_CANARY_REPS", "2").toInt
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     graft.TmpWork.install("graft_canary_")
     val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.local.dir", graft.TmpWork.diskTmp)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

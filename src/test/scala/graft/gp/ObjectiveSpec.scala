@@ -64,4 +64,11 @@ class ObjectiveSpec extends AnyFunSuite {
     assert(!v.isNaN && !v.isInfinity, s"value $v")
     assert(g.forall(d => !d.isNaN), s"grad $g")
   }
+
+  test("a non-positive-definite matrix throws with the Cholesky failure as cause") {
+    // eigenvalues 3 and -1: symmetric but indefinite
+    val m = breeze.linalg.DenseMatrix((1.0, 2.0), (2.0, 1.0))
+    val e = intercept[GPCore.NotPositiveDefiniteException](GPCore.cholOrThrow(m))
+    assert(e.getCause != null, "the breeze exception must ride along as the cause")
+  }
 }

@@ -99,4 +99,35 @@ class MediaStreamSpec extends SparkTestBase {
       .collect().map(_.ahash).distinct.sorted.mkString("-")
     assert(out(3L) == sig3, s"stream signature ${out(3L)} != batch $sig3")
   }
+
+  test("image and video first-seen gates run under strict codegen") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    def vid(id: Long, seed: Long): MediaStream.MediaArrival =
+      MediaStream.MediaArrival(id,
+        new Timestamp(1700000000000L + id * 1000L), Multimodal.encodeAvi(seed))
+    // fail hard instead of falling back to the interpreter when the
+    // generated Java cannot reach the arrival classes' accessors
+    spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try {
+      val imgs = MemoryStream[MediaStream.MediaArrival]
+      val images = graft.queries.StreamReplay(spark,
+          MediaStream.firstSeenImages(imgs.toDS(), watermark = "24 hours"),
+          "media_spec_strict_img")(
+        Seq(() => imgs.addData(Seq(arrival(0L, 0L), arrival(1L, 1L), arrival(2L, 0L)))))
+      val imageIds = images.collect().map(_.getLong(0)).toSet
+      assert(imageIds.contains(0L) && !imageIds.contains(2L), imageIds.toString)
+      val vids = MemoryStream[MediaStream.MediaArrival]
+      val videos = graft.queries.StreamReplay(spark,
+          MediaStream.firstSeenVideos(vids.toDS(), watermark = "24 hours"),
+          "media_spec_strict_vid")(
+        Seq(() => vids.addData(Seq(vid(1L, 1L), vid(2L, 2L), vid(3L, 1L)))))
+      val videoIds = videos.collect().map(_.getLong(0)).toSet
+      assert(videoIds.contains(1L) && !videoIds.contains(3L), videoIds.toString)
+    } finally {
+      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+      spark.conf.set("spark.sql.codegen.fallback", "true")
+    }
+  }
 }
